@@ -29,11 +29,17 @@ final class Checkpoints(spark: SparkSession, workDir: String) {
       Files.exists(Paths.get(metricsPath(name)))
 
   /** Read a completed stage's table directly — the RESUME entry point.
+    * Fails on a stage that is not complete (see [[isComplete]]), so a
+    * resume never reads a half-written table.
     * For a stage written with `partitionBy`, a filter on the partition
     * column prunes at the scan: a 100 TB resume that needs one bucket
     * reads one directory, not the whole checkpoint (PlanSpec-gated).
     */
-  def load(name: String): DataFrame = spark.read.parquet(path(name))
+  def load(name: String): DataFrame = {
+    require(isComplete(name),
+      s"checkpoint stage '$name' under $workDir is incomplete (no _SUCCESS or metrics sidecar)")
+    spark.read.parquet(path(name))
+  }
 
   /** Compute-or-load a stage. On compute: write parquet, then ONE read-back
     * job derives the row total and per-file lineage (the files ARE the

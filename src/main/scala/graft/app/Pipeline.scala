@@ -23,8 +23,9 @@ import graft.similarity.Sims
   *    (normalized caption, shingles, signatures) and everything downstream
   *    moves only ids + small features; bytes re-join once at fusion,
   *    id-partitioned;
-  *  - blocking unions 4 passes (MinHash/LSH, SimHash blocks, phash blocks,
-  *    substring) and dedups candidate pairs BEFORE verification;
+  *  - blocking unions 5 passes (MinHash/LSH, SimHash blocks, phash blocks,
+  *    substring containment, exact content hash) and dedups candidate
+  *    pairs BEFORE verification;
   *  - verification is one codegen'd projection (rule cascade);
   *  - CC is O(log n) rounds of sort-merge joins; refine touches only
   *    clustered rows via cogroup.

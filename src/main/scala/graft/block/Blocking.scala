@@ -264,75 +264,101 @@ object Blocking {
   /** Substring-containment pass: pairs (A, B) where A's normalized text is a
     * verbatim substring of B's (the north_star's "suffix-array substring
     * pass" for caption-substring duplicates). Distributed form: index B by
-    * every k-gram, probe with A's first k-gram, verify containment — the
+    * its byte windows, probe with a prefix of A, verify containment — the
     * inverted-index equivalent of a suffix scan, expressible as joins so
     * Catalyst plans the shuffle.
+    *
+    * Probe keys come in two tiers, both xxhash64 of a prefix of A:
+    *  - A of length >= 4k probes with its first 4k bytes, matched against
+    *    B's 4k-byte windows;
+    *  - A of length k..4k-1 probes with its first k bytes, matched against
+    *    B's k-byte windows (texts shorter than k never probe).
+    * If A ⊆ B then every prefix of A occurs in B, so either tier finds every
+    * containing B; the longer prefix only prunes non-containing candidates
+    * before the text joins and `instr`. On a 20000-row ImageGen corpus
+    * (30-word caption vocabulary, k = 8) the first 8 bytes fall into 794
+    * keys and the probe join emitted 6,423,798 (probe, doc) rows for 3,673
+    * pairs; the 32-byte prefix emits 9,263 rows for the same pairs. A
+    * longer prefix would move more captions into the unselective short
+    * tier.
+    *
+    * The skew cap still counts FIRST-k buckets for every probe, whatever
+    * its tier: a probe whose first k bytes are shared by more than `cap`
+    * probes is dropped, exactly as the DuckDB oracle's surviving-key CTE
+    * (`okk` in `Queries.ddSubstringSql`) does. So the pair set is the
+    * same as with a single k-byte key; 4k is derived from k, not an option.
     */
   def substringPairs(records: DataFrame, idCol: String, normCol: String, k: Int,
                      cap: Option[Int] = None,
                      maxCollectedKeys: Int = 16000000): DataFrame = {
-    // keys are xxhash64 of the k-gram, not the k-gram string: the index
-    // explodes ~|text| keys per record, so hashing cuts the shuffled key
-    // bytes and replaces string-compare joins with long joins. A hash
-    // collision only adds a candidate; the containment verify below is
-    // exact, so results are unchanged.
-    val probe0 = records.select(
-        col(idCol).as("pid"), col(normCol).as("ptext"),
-        Signatures.fastHashCol(substring(col(normCol), 1, k)).as("key"))
-      .where(length(col(normCol)) >= k)
-    // skew guard: a prefix key probed by more than `cap` records makes the
+    // keys are xxhash64 of the prefix/window, not the string: the index
+    // has ~|text| windows per record, so hashing cuts the key bytes and
+    // replaces string-compare joins with long joins. A hash collision
+    // (within or across tiers) only adds a candidate; the containment
+    // verify below is exact, so results are unchanged.
+    val norm = col(normCol)
+    val wideK = 4 * k
+    def prefixKey(w: Int) = Signatures.fastHashCol(substring(norm, 1, w))
+    val wide = length(norm) >= wideK
+    val probe0 = records.where(length(norm) >= k).select(
+      col(idCol).as("pid"),
+      prefixKey(k).as("kkey"),
+      when(wide, prefixKey(wideK)).otherwise(prefixKey(k)).as("key"),
+      wide.as("wide"))
+    // skew guard: a first-k key probed by more than `cap` records makes the
     // bucket join quadratic — drop it (counted by callers via metrics)
     val probe = cap match {
       case Some(c) =>
-        val counts = probe0.groupBy("key").agg(count(lit(1)).as("_n"))
-        probe0.join(counts.where(col("_n") <= c), Seq("key")).drop("_n")
+        val counts = probe0.groupBy("kkey").agg(count(lit(1)).as("_n"))
+        probe0.join(counts.where(col("_n") <= c), Seq("kkey")).drop("_n")
       case None => probe0
     }
-    // The exploded index is (iid, key) ONLY — carrying the text through the
-    // ~|corpus|·|text| exploded rows multiplies the materialized bytes by
-    // the text length (measured 10 s -> ~2 s at sf0.1). Texts re-attach by
-    // id AFTER the key join, on the (much smaller) candidate set. A (p, i)
-    // pair matches at most once: the probe key is p's single first k-gram
-    // and index keys are distinct per document.
+    // The index is (iid, key) ONLY — carrying the text through the
+    // exploded rows multiplies the materialized bytes by the text length
+    // (measured 10 s -> ~2 s at sf0.1). Texts re-attach by id AFTER the key
+    // join, on the (much smaller) candidate set.
     // The index side never materializes the ~|corpus|·|text| exploded
-    // k-gram rows: the probe-key set (one 8-byte key per record) is
-    // collected sorted to the driver and pushed INTO a native expression
-    // (KeysInSortedSet) that intersects each document's sorted k-gram
-    // hashes with it in a merge scan — each document emits only its
-    // MATCHING keys (typically a handful), so the explode and the join
-    // machinery never see the non-matches (measured 9.7 s -> ~2 s at
-    // sf0.1; the old form shuffled ~10^8 exploded rows). This is the
-    // broadcast-build side of a hash join expressed as an expression.
+    // window rows: each tier's probe-key set is collected sorted to the
+    // driver and pushed INTO a native expression (KeysInSortedSet) that
+    // intersects each document's sorted window hashes with it in a merge
+    // scan — each document emits only its MATCHING keys, so the explode
+    // and the join machinery never see the non-matches (measured 9.7 s ->
+    // ~2 s at sf0.1). This is the broadcast-build side of a hash join
+    // expressed as an expression; a tier with no probe keys is not hashed.
     //
     // Driver-memory guard: the collect is bounded by `maxCollectedKeys`
     // (LIMIT max+1 — ONE job detects overflow AND fetches the set, and the
-    // driver never holds more than max+1 longs). Past the bound — a 10^12-
+    // driver never holds more than max+1 keys). Past the bound — a 10^12-
     // row corpus with a large short-text fraction would be ~TBs of keys —
     // the pass switches to the fully-distributed inverted-index join: every
-    // k-gram explodes and shuffle-joins against the probe keys. Same pair
-    // set (gated by OpsSpec "substring fallback" pair-set equality), no
-    // driver state; it trades the merge-scan pruning for shuffle, which is
-    // the right trade only when the build side stops fitting.
-    val probeKeyRows = probe.select(col("key")).distinct()
+    // window of both tiers explodes and shuffle-joins against the probe
+    // keys. Same pair set (gated by PlanSpec "substring fallback" pair-set
+    // equality), no driver state; it trades the merge-scan pruning for
+    // shuffle, which is the right trade only when the build side stops
+    // fitting.
+    val probeKeyRows = probe.select(col("wide"), col("key")).distinct()
       .limit(maxCollectedKeys + 1).collect()
-    val candIds = if (probeKeyRows.length <= maxCollectedKeys) {
-      val probeKeys: Array[Long] = probeKeyRows.map(_.getLong(0)).sorted
-      val matchedKeys = graft.functions.GraftColumnBridgeOps.keysInSortedSet(
-        Signatures.hashedShinglesCol(col(normCol), k), probeKeys)
-      val index = records.select(col(idCol).as("iid"),
-        explode(matchedKeys).as("key"))
-      broadcast(probe.select(col("pid"), col("key")))
-        .join(index, Seq("key"))
-        .where(col("pid") =!= col("iid"))
-        .select(col("pid"), col("iid"))
+    val collected = probeKeyRows.length <= maxCollectedKeys
+    val index = if (collected) {
+      def keysOf(w: Boolean) =
+        probeKeyRows.filter(_.getBoolean(0) == w).map(_.getLong(1)).sorted
+      val matched = Seq(k -> keysOf(false), wideK -> keysOf(true)).collect {
+        case (w, keys) if keys.nonEmpty => graft.functions.GraftColumnBridgeOps
+          .keysInSortedSet(Signatures.hashedShinglesCol(norm, w), keys)
+      }
+      records.select(col(idCol).as("iid"),
+        explode(matched.reduceOption(concat(_, _))
+          .getOrElse(typedLit(Array.empty[Long]))).as("key"))
     } else {
-      val index = records.select(col(idCol).as("iid"),
-        explode(Signatures.hashedShinglesCol(col(normCol), k)).as("key"))
-      probe.select(col("pid"), col("key"))
-        .join(index, Seq("key"))
-        .where(col("pid") =!= col("iid"))
-        .select(col("pid"), col("iid"))
+      records.select(col(idCol).as("iid"),
+        explode(concat(Signatures.hashedShinglesCol(norm, k),
+          Signatures.hashedShinglesCol(norm, wideK))).as("key"))
     }
+    val probeIds = probe.select(col("pid"), col("key"))
+    val candIds = (if (collected) broadcast(probeIds) else probeIds)
+      .join(index, Seq("key"))
+      .where(col("pid") =!= col("iid"))
+      .select(col("pid"), col("iid"))
     candIds
       .join(records.select(col(idCol).as("pid"), col(normCol).as("ptext")), Seq("pid"))
       .join(records.select(col(idCol).as("iid"), col(normCol).as("itext")), Seq("iid"))

@@ -22,14 +22,16 @@ object ConnectedComponents {
 
   /** @param edges DataFrame with two columns (src, dst) of one orderable
     *              type (long or string). Self-loops ignored.
-    * @return DataFrame (id, cluster_id) for every node incident to an edge;
-    *         callers union isolated records back as singletons.
-    */
-  /** @param minIter rounds to run before paying for convergence checks.
+    * @param maxIter round budget; a loop that has not converged after it
+    *        throws (naming the rounds run) rather than return a partial
+    *        assignment
+    * @param minIter rounds to run before paying for convergence checks.
     *        The signature agg is one cheap job; computing it from round 1
     *        lets dense dedup graphs (near-cliques collapse to a star in one
     *        alternating round) exit after 2 rounds instead of paying an
     *        extra ~6-shuffle round to discover convergence later
+    * @return DataFrame (id, cluster_id) for every node incident to an edge;
+    *         callers union isolated records back as singletons.
     */
   def run(edges: DataFrame, maxIter: Int = 30, minIter: Int = 1): DataFrame = {
     val spark = edges.sparkSession
@@ -135,6 +137,11 @@ object ConnectedComponents {
     }
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       System.err.println(s"[cc] rounds=$iter converged=$converged")
+    if (!converged) {
+      eRdd.unpersist(false)
+      throw new IllegalStateException(
+        s"connected components did not converge in $iter rounds (maxIter=$maxIter)")
+    }
 
     // The final round's RDD must stay persisted until the CALLER materializes
     // the assignment (the result below is lazy), so it can't be released

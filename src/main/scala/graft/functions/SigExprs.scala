@@ -371,7 +371,7 @@ object SigKernels {
     val n = a.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
     val ids = a.toLongArray()
-    val out = new java.util.ArrayList[AnyRef](n * (n - 1) / 2)
+    val out = new java.util.ArrayList[AnyRef](pairCapacityHint(n))
     var i = 0
     while (i < n - 1) {
       var j = i + 1
@@ -388,6 +388,22 @@ object SigKernels {
       i += 1
     }
     new GenericArrayData(out.toArray)
+  }
+
+  /** Most elements one JVM array reliably holds. */
+  private val MaxArrayLen = Int.MaxValue - 8
+
+  /** Initial capacity of [[pairLongIds]]' list for an n-id bucket: C(n,2)
+    * computed in Long (in Int, n*(n-1) overflows from n = 46,342), clamped
+    * so a huge bucket does not allocate its whole list up front. Fails,
+    * naming the bucket size, when C(n,2) exceeds one array (n >= 65,537).
+    */
+  def pairCapacityHint(n: Int): Int = {
+    val pairs = n.toLong * (n - 1) / 2
+    require(pairs <= MaxArrayLen,
+      s"blocking bucket of $n ids has $pairs pairs, more than one array holds " +
+        s"($MaxArrayLen); cap the bucket size")
+    math.min(pairs, 1L << 20).toInt
   }
 
   /** Comma-joined decimal rendering of an array<bigint> — the digest

@@ -67,6 +67,17 @@ class OpsSpec extends AnyFunSuite {
     assert((50L until 60L).forall(i => got(i) == i), "isolated nodes are singletons")
   }
 
+  test("CC fails loudly when maxIter runs out before convergence") {
+    import spark.implicits._
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](
+      ConnectedComponents.run(path, maxIter = 2).collect())
+    assert(e.getMessage.contains("2 rounds"), e.getMessage)
+    val got = ConnectedComponents.run(path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 64L).map(_ -> 0L).toMap, "default maxIter must converge")
+  }
+
   test("SRP-LSH ANN recall >= 0.9 of brute-force threshold pairs") {
     val vecs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val exact = Embeddings.thresholdPairs(vecs, 0.4)

@@ -141,26 +141,71 @@ class PlanSpec extends AnyFunSuite {
     // planted containments: short texts embedded in longer ones, plus junk
     val rng = new scala.util.Random(11)
     val shorts = (0 until 40).map(i =>
-      (s"s$i%03d", (0 until 6 + rng.nextInt(5)).map(_ => ('a' + rng.nextInt(4)).toChar).mkString))
+      (f"s$i%03d", (0 until 6 + rng.nextInt(5)).map(_ => ('a' + rng.nextInt(4)).toChar).mkString))
     val longs = shorts.zipWithIndex.map { case ((_, t), i) =>
       (f"l$i%03d", s"xx$t yy zz$i")
     }
     val junk = (0 until 60).map(i => (f"j$i%03d", s"qqq${rng.nextInt(100000)}www$i"))
-    val df = (shorts ++ longs ++ junk).toDF("id", "norm")
     val k = 5
-    val collected = Blocking.substringPairs(df, "id", "norm", k)
-    val sharded = Blocking.substringPairs(df, "id", "norm", k, maxCollectedKeys = 0)
-    // the threshold switch exists: the bounded path plans the native
-    // merge-scan expression, the fallback must NOT (it's the distributed
-    // inverted-index join with no driver-collected state)
-    assert(collected.queryExecution.executedPlan.toString.toLowerCase
-      .contains("keysinsortedset"), "default path should use KeysInSortedSet")
-    assert(!sharded.queryExecution.executedPlan.toString.toLowerCase
-      .contains("keysinsortedset"), "fallback must not collect probe keys")
-    val a = collected.as[(String, String)].collect().toSet
-    val b = sharded.as[(String, String)].collect().toSet
-    assert(a.nonEmpty, "planted containments must produce pairs")
-    assert(a == b, s"pair sets differ: only-default=${a -- b} only-fallback=${b -- a}")
+    val wideK = 4 * k // probes this long key on their first 4k bytes
+    val cap = 3
+    val at4k = "mnopqrstuvmnopqrstuv"
+    val under4k = "abcdefghijklmnopqrs"
+    val over4k = "the quick brown fox jumps o"
+    // probe lengths k, 4k-1 (k-byte tier), 4k and 4k+7 (4k-byte tier); the
+    // 4k-byte probe sits in two (4k+1)-byte texts
+    val tiers = Seq(
+      "t_k" -> "hello", "t_k_in" -> "say hello",
+      "t_4k1" -> under4k, "t_4k1_in" -> s"$under4k end",
+      "t_4k" -> at4k, "t_4k_in_a" -> s"${at4k}w", "t_4k_in_b" -> s"w$at4k",
+      "t_over" -> over4k, "t_over_in" -> s"so ${over4k}ver it")
+    // a first-k bucket probed by cap+2 texts of both tiers: capped away as
+    // probes, though each is contained in its own container
+    val hot = (0 until cap + 2).flatMap { i =>
+      val t = if (i % 2 == 0) s"hotky bucket $i" else s"hotky bucket number $i"
+      Seq(s"h$i" -> t, s"h${i}_in" -> s"in $t ok")
+    }
+    val rows = shorts ++ longs ++ junk ++ tiers ++ hot
+    assert(Seq(under4k, at4k, over4k).map(_.length) == Seq(wideK - 1, wideK, wideK + 7))
+    val df = rows.toDF("id", "norm")
+
+    // brute force over the collected rows: every (probe, text) containment,
+    // probes with length >= k whose first-k bucket holds <= cap probes
+    def brute(capOpt: Option[Int]): Set[(String, String)] = {
+      val probes = rows.filter(_._2.length >= k)
+      val bucket = probes.groupBy(_._2.take(k)).map { case (p, m) => p -> m.size }
+      val kept = probes.filter(p => capOpt.forall(bucket(p._2.take(k)) <= _))
+      (for {
+        (pid, ptext) <- kept
+        (iid, itext) <- rows
+        if pid != iid && itext.contains(ptext)
+      } yield if (pid < iid) (pid, iid) else (iid, pid)).toSet
+    }
+
+    for (capOpt <- Seq(None, Some(cap))) {
+      val collected = Blocking.substringPairs(df, "id", "norm", k, capOpt)
+      val sharded = Blocking.substringPairs(df, "id", "norm", k, capOpt, maxCollectedKeys = 0)
+      // the threshold switch exists: the bounded path plans the native
+      // merge-scan expression, the fallback must NOT (it's the distributed
+      // inverted-index join with no driver-collected state)
+      assert(collected.queryExecution.executedPlan.toString.toLowerCase
+        .contains("keysinsortedset"), "default path should use KeysInSortedSet")
+      assert(!sharded.queryExecution.executedPlan.toString.toLowerCase
+        .contains("keysinsortedset"), "fallback must not collect probe keys")
+      val a = collected.as[(String, String)].collect().toSet
+      val b = sharded.as[(String, String)].collect().toSet
+      val exp = brute(capOpt)
+      assert(a.nonEmpty, "planted containments must produce pairs")
+      assert(a == b, s"pair sets differ: only-default=${a -- b} only-fallback=${b -- a}")
+      assert(a == exp, s"cap=$capOpt: only-default=${a -- exp} only-brute=${exp -- a}")
+      Seq("t_k" -> "t_k_in", "t_4k1" -> "t_4k1_in", "t_4k" -> "t_4k_in_a",
+        "t_4k" -> "t_4k_in_b", "t_over" -> "t_over_in").foreach { p =>
+        assert(a.contains(p), s"cap=$capOpt: planted tier pair $p missing")
+      }
+      val hotPairs = (0 until cap + 2).map(i => (s"h$i", s"h${i}_in"))
+      assert(hotPairs.forall(a.contains) == capOpt.isEmpty,
+        s"cap=$capOpt: the over-cap first-k bucket must be dropped only under the cap")
+    }
   }
 
   test("catalog SNM plan has no single-partition Window") {
@@ -578,6 +623,21 @@ class PlanSpec extends AnyFunSuite {
     assert(partDirs(resume) == 1L,
       s"filtered resume must scan 1 partition, scanned ${partDirs(resume)}")
     assert(partDirs(cp.load("t_assign")) > 1L)
+  }
+
+  test("checkpoint load refuses a half-written stage") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-cp-half").toString
+    val cp = new graft.app.Checkpoints(spark, work)
+    // a crash mid-write: the stage's parquet files exist, _SUCCESS does not
+    (0L until 10L).toDF("id").write.parquet(s"$work/t_half")
+    Files.delete(java.nio.file.Paths.get(work, "t_half", "_SUCCESS"))
+    cp.writeMetrics("t_half", """{"stage":"t_half"}""")
+    assert(!cp.isComplete("t_half"))
+    val e = intercept[IllegalArgumentException](cp.load("t_half"))
+    assert(e.getMessage.contains("t_half"), e.getMessage)
+    cp.stage("t_done")((0L until 10L).toDF("id"))
+    assert(cp.load("t_done").count() == 10L)
   }
 
   test("incrementalAssignDelta: the standing assignment table is never " +

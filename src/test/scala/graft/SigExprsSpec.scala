@@ -242,6 +242,23 @@ class SigExprsSpec extends AnyFunSuite {
       s"native pair kernel diverges from HOF expansion: $native vs $viaHof")
   }
 
+  test("pairLongIds: capacity hint is Long-safe; an unpairable bucket fails naming its size") {
+    import graft.functions.SigKernels
+    assert(SigKernels.pairCapacityHint(2) == 1)
+    assert(SigKernels.pairCapacityHint(64) == 2016)
+    // 46,342 * 46,341 overflows Int; C(n,2) = 1,073,767,011 fits an array
+    assert(SigKernels.pairCapacityHint(46342) == (1 << 20))
+    assert(SigKernels.pairCapacityHint(65536) == (1 << 20))
+    // C(65,538, 2) = 2,147,581,953 > Int.MaxValue - 8
+    val e = intercept[IllegalArgumentException](SigKernels.pairCapacityHint(65538))
+    assert(e.getMessage.contains("65538 ids"), e.getMessage)
+    // the kernel itself at 46,342 ids: one repeated id yields no pairs, so
+    // nothing is materialized, but the hint is still computed
+    val same = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array.fill(46342)(7L))
+    assert(SigKernels.pairLongIds(same).numElements() == 0)
+  }
+
   test("bandHashKeys: deterministic, band-positional, 58-bit masked (namespace-safe)") {
     val cfg = DedupConfig()
     val sigCol = Signatures.minHashFromHashesCol(
